@@ -4,9 +4,11 @@ import graft.functions.Coercions
 import graft.schema.SchemaMapper
 import graft.schema.SchemaMapper.StreamSchema
 import graft.validate.Validator
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.json4s.{JInt, JLong, JNothing, JObject, JValue}
+import org.json4s.jackson.JsonMethods
 
 import java.nio.file.{Files, Paths}
 import java.time.format.DateTimeFormatter
@@ -22,9 +24,6 @@ import java.time.{ZoneOffset, ZonedDateTime}
   * @param fixedHeaders     per-stream column projection, P1 (`sinks.py:147-153`).
   * @param strictValidation fail the job on a draft-7 violation, P3
   *                         (`sinks.py:131-139`).
-  * @param stageByStream    scale path for many interleaved streams: one
-  *                         partitioned staging pass instead of one full input
-  *                         scan per stream (see [[SingerPipeline.run]]).
   * @param schemaMessages   pre-supplied Singer SCHEMA message JSONs. When
   *                         set, the discovery scan is skipped entirely —
   *                         at 100 TB a full input pass just to find the
@@ -52,7 +51,6 @@ final case class SingerConfig(
     outDir: String,
     fixedHeaders: Map[String, Seq[String]] = Map.empty,
     strictValidation: Boolean = false,
-    stageByStream: Boolean = false,
     schemaMessages: Option[Seq[String]] = None,
     compression: Option[String] = None,
     partitionBy: Map[String, Seq[String]] = Map.empty,
@@ -91,13 +89,10 @@ final case class IngestResult(
   * shuffle anywhere; every stage is a narrow map/filter, so a 1000-executor
   * cluster scales linearly with input splits.
   *
-  * Scale design (100 TB input): the naive layout runs one full input scan
-  * per stream (text sources have no predicate pushdown). Fine for a handful
-  * of streams; for many, `stageByStream = true` switches to exactly TWO
-  * passes total: pass 1 writes raw record lines to a parquet staging dir
-  * partitioned by stream (a hash-partitioned shuffle-free write), pass 2
-  * runs each stream's typed projection over only its partition directory —
-  * partition pruning makes each per-stream job read only its own bytes.
+  * Scan count: one discovery scan for the SCHEMA lines (skipped when
+  * [[SingerConfig.schemaMessages]] is supplied) plus one full input scan
+  * per stream — text sources have no predicate pushdown, so each stream's
+  * job reads every line and keeps its own RECORDs.
   */
 object SingerPipeline {
 
@@ -223,33 +218,13 @@ object SingerPipeline {
     }.reduce(_.unionByName(_))
   }
 
-  /** RECORD lines of one stream → typed DataFrame: `from_json` with an
-    * all-string struct (P2: missing fields → null, extra fields dropped —
-    * `sinks.py:165-166`) then the E1–E8 coercion projection
-    * ([[graft.functions.Coercions]]).
-    *
-    * PRECONDITION: `recordLines` must already contain only this stream's
-    * RECORD lines (the staged ingest path guarantees it by partition
-    * filter) — a SCHEMA/STATE line has no `$.record` and would emit an
-    * all-null row, not be skipped. Use [[typedRecordsFromLines]] for
-    * unfiltered Singer input.
+  /** The coercion projection (+ optional raw-null flags) over the parsed
+    * all-string record struct.
     *
     * `keepRawNulls`: also emit `_raw_null_<prop>` for required fields —
     * the PRE-coercion nullness [[graft.validate.Validator]] needs so a
     * present-but-coercion-nulled value (malformed timestamp) isn't
     * misflagged as a `required` violation. Dropped by enforce/annotate.
-    */
-  def typedRecords(
-      recordLines: DataFrame,
-      ss: StreamSchema,
-      keepRawNulls: Boolean = false): DataFrame =
-    recordLines
-      .select(from_json(get_json_object(col("value"), "$.record"), ss.parseStruct).as("r"))
-      .select(coerceProjection(ss, col("r"), keepRawNulls): _*)
-
-  /** The shared coercion projection (+ optional raw-null flags) over the
-    * parsed all-string record struct — ONE definition for both ingest
-    * shapes so validation semantics can never diverge between them.
     */
   private def coerceProjection(
       ss: StreamSchema,
@@ -264,7 +239,12 @@ object SingerPipeline {
     coerced ++ rawNulls
   }
 
-  /** Filter + extract + coerce in ONE JSON parse: the message envelope and
+  /** RECORD lines of one stream → typed DataFrame: `from_json` with an
+    * all-string struct (P2: missing fields → null, extra fields dropped —
+    * `sinks.py:165-166`) then the E1–E8 coercion projection
+    * ([[graft.functions.Coercions]]).
+    *
+    * Filter + extract + coerce in ONE JSON parse: the message envelope and
     * the record body come out of a single `from_json` whose schema embeds
     * the stream's parse struct. The per-stream alternative — two
     * `get_json_object` filters plus a record-path extract plus `from_json`
@@ -291,18 +271,15 @@ object SingerPipeline {
       .select(coerceProjection(ss, col("m.record"), keepRawNulls): _*)
   }
 
-  /** The last-STATE capture, shared by the batch observe, the
-    * empty-registry fallback, and the streaming per-batch observe — ONE
-    * definition because the `monotonically_increasing_id` ordering
-    * subtlety (documented at [[ingest]]'s observeState) is load-bearing
-    * in all three: stamp `_line_id`, then `max_by` the line whose type is
-    * STATE. A fix to the ordering or the STATE predicate propagates
-    * everywhere by construction.
+  /** The last-STATE capture, shared by the first-scan observe and the
+    * empty-registry fallback in [[writeStreams]]: stamp `_line_id`, then
+    * `max_by` the line whose type is STATE (ordering argument at
+    * [[writeStreams]]).
     */
-  private[graft] def withLineId(df: DataFrame): DataFrame =
+  private def withLineId(df: DataFrame): DataFrame =
     df.withColumn("_line_id", monotonically_increasing_id())
 
-  private[graft] def lastStateAgg: Column =
+  private def lastStateAgg: Column =
     max_by(
       col("value"),
       when(get_json_object(col("value"), "$.type") === "STATE", col("_line_id")))
@@ -327,12 +304,7 @@ object SingerPipeline {
   }
 
   /** Full batch ingest: Singer JSON lines → one Parquet dataset per stream +
-    * record-count metrics.
-    *
-    * A1 metrics ride on `Observation` (accumulator-backed, collected by the
-    * write job itself) — zero extra passes, unlike the reference's
-    * per-record read-modify-write of `job_metrics.json` (`writers.py:52-74`,
-    * the O(records) file-I/O hot spot called out in BASELINE.md).
+    * record-count metrics, written by [[writeStreams]].
     *
     * K4: streams with a SCHEMA but no records produce NO output
     * (`tests/test_integration.py:278-308`) — detected from the observed
@@ -342,7 +314,6 @@ object SingerPipeline {
     ingest(spark.read.text(inputPath), config)
 
   def ingest(lines: DataFrame, config: SingerConfig): IngestResult = {
-    val spark = lines.sparkSession
     val registry = parseSchemas(lines, config)
     // fail FAST on a colliding naming scheme — before any write job runs,
     // not after stream #2 trips over stream #1's output path
@@ -352,38 +323,40 @@ object SingerPipeline {
           s"has ${registry.size} streams — their outputs would collide")
     }
     val now = ZonedDateTime.now(ZoneOffset.UTC)
-
-    // Per-stream typed projection. Direct path: ONE single-parse job per
-    // stream over the raw lines ([[typedRecordsFromLines]]). Staged path:
-    // records pre-filtered into per-stream partition directories, so the
-    // type/stream predicates are already satisfied and [[typedRecords]]'s
-    // record-only parse suffices.
-    var stagingToClean: Option[java.nio.file.Path] = None
-
-    // Strict mode with a schema using keywords OUTSIDE the Column-encodable
-    // set (`uniqueItems`, `oneOf`, `$ref`, ...) engages the row-level
-    // draft-7 fallback on the raw record text BEFORE projection — otherwise
-    // those keywords would silently go unchecked (round-1 verdict, top
-    // missing feature). Costs extra `get_json_object` walks on exactly the
-    // streams that need it; schemas in the SQL subset keep the single-parse
-    // fast path untouched.
-    def rowChecked(df: DataFrame, ss: StreamSchema, recordText: Column): DataFrame = {
-      // the reference validates the FULL record BEFORE fixed_headers
-      // projection (sinks.py:131-153): if pruning dropped properties, the
-      // Column layer can no longer see their constraints — the row-level
-      // validator (which reads the raw record against the full original
-      // schema) must take over, keyword set notwithstanding
-      lazy val prunedAway = (ss.rawSchema \ "properties") match {
-        case org.json4s.JObject(fs) =>
-          fs.map(_._1).toSet -- ss.properties.map(_.name).toSet
-        case _ => Set.empty[String]
-      }
-      if (config.strictValidation &&
-          (Validator.needsRowValidator(ss.rawSchema) || prunedAway.nonEmpty))
-        Validator.enforceRows(df, ss.rawSchema, recordText)
-      else df
+    val paths = registry.keys.map(s => s -> outputPath(config, s, now)).toMap
+    val (counts, lastState) =
+      writeStreams(lines, registry, config, paths, SaveMode.ErrorIfExists)
+    // K4: no records → no file
+    counts.foreach { case (stream, n) =>
+      if (n == 0L) deleteRecursively(Paths.get(paths(stream)))
     }
+    IngestResult(
+      paths = paths.filter { case (stream, _) => counts(stream) > 0L },
+      recordCounts = counts,
+      lastState = lastState.map(stateValue))
+  }
 
+  /** The one per-stream write routine behind both entry points — batch
+    * [[ingest]] and every [[graft.streaming.SingerStream]] micro-batch — so
+    * routing, coercion, validation and the write options cannot drift
+    * between them. Per stream, in sorted order: ONE single-parse job over
+    * `lines` ([[typedRecordsFromLines]]), strict validation when
+    * configured, then a parquet write to `pathFor(stream)` with the
+    * configured codec and partition columns.
+    *
+    * A1 metrics ride on `Observation` (accumulator-backed, collected by the
+    * write job itself) — zero extra passes, unlike the reference's
+    * per-record read-modify-write of `job_metrics.json` (`writers.py:52-74`,
+    * the O(records) file-I/O hot spot called out in BASELINE.md).
+    *
+    * @return per-stream record counts and the last STATE line in `lines`
+    */
+  private[graft] def writeStreams(
+      lines: DataFrame,
+      registry: Map[String, StreamSchema],
+      config: SingerConfig,
+      pathFor: String => String,
+      mode: SaveMode): (Map[String, Long], Option[String]) = {
     // STATE passthrough rides an Observation on the FIRST job that scans
     // the raw lines — zero extra passes (at 100 TB a dedicated state scan
     // would be a full input read for O(1) bytes of metadata). "Last" is
@@ -393,7 +366,7 @@ object SingerPipeline {
     // last line in input order — the canonical stdin-capture layout.
     // Multi-file inputs order by Spark's size-desc listing; Singer defines
     // no cross-file order either.
-    val stateObs = Observation(s"state-${tsFmt.format(now)}")
+    val stateObs = Observation()
     var stateObserved = false
     def observeState(df: DataFrame): DataFrame =
       if (stateObserved) df
@@ -404,85 +377,69 @@ object SingerPipeline {
           .select(col("value"))
       }
 
-    val typedFor: (String, StreamSchema) => DataFrame =
-      if (config.stageByStream && registry.size > 1) {
-        // Pass 1: stage raw record lines partitioned by stream. One scan of
-        // the input regardless of stream count; per-stream jobs then prune
-        // to their own partition directory.
-        val stagingDir = s"${config.outDir}/.staging-${tsFmt.format(now)}"
-        stagingToClean = Some(Paths.get(stagingDir))
-        observeState(lines)
-          .filter(get_json_object(col("value"), "$.type") === "RECORD")
-          .withColumn("_stream", get_json_object(col("value"), "$.stream"))
-          .write.partitionBy("_stream").parquet(stagingDir)
-        (stream: String, ss: StreamSchema) => {
-          val pruned = spark.read
-            .schema("value STRING, _stream STRING")
-            .parquet(stagingDir)
-            .filter(col("_stream") === stream)
-            .select(col("value"))
-          typedRecords(
-            rowChecked(pruned, ss, get_json_object(col("value"), "$.record")),
-            ss, keepRawNulls = config.strictValidation)
-        }
-      } else { (stream: String, ss: StreamSchema) =>
-        typedRecordsFromLines(
-          rowChecked(
-            observeState(lines), ss,
-            when(
-              get_json_object(col("value"), "$.type") === "RECORD" &&
-                get_json_object(col("value"), "$.stream") === stream,
-              get_json_object(col("value"), "$.record"))),
-          ss, keepRawNulls = config.strictValidation)
-      }
-
-    // staging is scratch, never output: clean it up in finally — a strict-
-    // validation raise (or any write failure) must not orphan a full copy
-    // of the record input under outDir, accumulating per retry
-    val results =
-      try registry.toSeq.sortBy(_._1).map { case (stream, ss) =>
-        val typed0 = typedFor(stream, ss)
-        val typed = if (config.strictValidation) Validator.enforce(typed0, ss) else typed0
-        val obs = Observation(s"ingest-$stream")
-        val path = outputPath(config, stream, now)
-        val writer = typed.observe(obs, count(lit(1)).as("records")).write
-        config.compression.foreach(c => writer.option("compression", c))
-        config.partitionBy.get(stream).filter(_.nonEmpty)
-          .foreach(cols => writer.partitionBy(cols: _*))
-        writer.parquet(path)
-        val n = obs.get("records").asInstanceOf[Long]
-        if (n == 0L) deleteRecursively(Paths.get(path)) // K4: no records → no file
-        (stream, path, n)
-      }
-      finally stagingToClean.foreach(deleteRecursively)
+    val counts = registry.toSeq.sortBy(_._1).map { case (stream, ss) =>
+      val typed0 = typedRecordsFromLines(
+        rowChecked(observeState(lines), ss, config),
+        ss, keepRawNulls = config.strictValidation)
+      val typed = if (config.strictValidation) Validator.enforce(typed0, ss) else typed0
+      val obs = Observation()
+      val writer = typed.observe(obs, count(lit(1)).as("records")).write.mode(mode)
+      config.compression.foreach(c => writer.option("compression", c))
+      config.partitionBy.get(stream).filter(_.nonEmpty)
+        .foreach(cols => writer.partitionBy(cols: _*))
+      writer.parquet(pathFor(stream))
+      stream -> obs.get("records").asInstanceOf[Long]
+    }.toMap
 
     // No stream jobs ran (empty registry): a STATE-only input still owes
     // its tap a state echo — dedicated tiny aggregate, nothing else scans.
-    val lastStateLine: Option[String] =
+    val lastState =
       if (stateObserved) Option(stateObs.get("last_state")).map(_.toString)
       else
         Option(
           withLineId(lines)
             .agg(lastStateAgg.as("last_state"))
             .head().getString(0))
+    (counts, lastState)
+  }
 
-    IngestResult(
-      paths = results.collect { case (s, p, n) if n > 0 => s -> p }.toMap,
-      recordCounts = results.map { case (s, _, n) => s -> n }.toMap,
-      lastState = lastStateLine.map(stateValue))
+  /** Strict mode with a schema using keywords OUTSIDE the Column-encodable
+    * set (`uniqueItems`, `oneOf`, `$ref`, ...) engages the row-level
+    * draft-7 fallback on the raw record text BEFORE projection — otherwise
+    * those keywords would silently go unchecked (round-1 verdict, top
+    * missing feature). Costs extra `get_json_object` walks on exactly the
+    * streams that need it; schemas in the SQL subset keep the single-parse
+    * fast path untouched.
+    */
+  private def rowChecked(df: DataFrame, ss: StreamSchema, config: SingerConfig): DataFrame = {
+    // the reference validates the FULL record BEFORE fixed_headers
+    // projection (sinks.py:131-153): if pruning dropped properties, the
+    // Column layer can no longer see their constraints — the row-level
+    // validator (which reads the raw record against the full original
+    // schema) must take over, keyword set notwithstanding
+    lazy val prunedAway = (ss.rawSchema \ "properties") match {
+      case JObject(fs) =>
+        fs.map(_._1).toSet -- ss.properties.map(_.name).toSet
+      case _ => Set.empty[String]
+    }
+    if (config.strictValidation &&
+        (Validator.needsRowValidator(ss.rawSchema) || prunedAway.nonEmpty))
+      Validator.enforceRows(df, ss.rawSchema, when(
+        get_json_object(col("value"), "$.type") === "RECORD" &&
+          get_json_object(col("value"), "$.stream") === ss.stream,
+        get_json_object(col("value"), "$.record")))
+    else df
   }
 
   /** The `value` payload of a full STATE message line — what a Singer
     * target writes to stdout (`tests/conftest.py:44-45`: the message is
     * `{"type": "STATE", "value": <state>}`; the echo is `<state>`).
     */
-  def stateValue(stateLine: String): String = {
-    import org.json4s.jackson.JsonMethods
+  def stateValue(stateLine: String): String =
     JsonMethods.parse(stateLine) \ "value" match {
-      case org.json4s.JNothing => "{}"
-      case v                   => JsonMethods.compact(JsonMethods.render(v))
+      case JNothing => "{}"
+      case v        => compactJson(v)
     }
-  }
 
   /** A1: merge record counts into `job_metrics.json`, accumulating onto an
     * existing file like `writers.py:60-69` — but once per JOB, not once per
@@ -490,38 +447,36 @@ object SingerPipeline {
     */
   def writeJobMetrics(dir: String, counts: Map[String, Long]): Unit = {
     val path = Paths.get(dir, "job_metrics.json")
-    val existing: Map[String, Long] =
-      if (Files.exists(path)) {
-        import org.json4s._
-        import org.json4s.jackson.JsonMethods
-        JsonMethods.parse(Files.readString(path)) \ "recordCount" match {
-          case JObject(fields) =>
-            fields.collect {
-              case (k, JInt(v))  => k -> v.toLong
-              case (k, JLong(v)) => k -> v
-            }.toMap
-          case _ => Map.empty
-        }
-      } else Map.empty
+    val existing =
+      if (Files.exists(path)) readCounts(JsonMethods.parse(Files.readString(path)) \ "recordCount")
+      else Map.empty[String, Long]
     val merged = (existing.keySet ++ counts.keySet).map { k =>
       k -> (existing.getOrElse(k, 0L) + counts.getOrElse(k, 0L))
-    }.toSeq.sortBy(_._1)
+    }.toMap
     Files.createDirectories(path.getParent)
-    Files.writeString(path, renderMetrics(merged))
+    Files.writeString(path, compactJson(JObject("recordCount" -> countsJson(merged))))
   }
 
-  /** Proper JSON rendering (json4s) — hand-rolled escaping breaks on
-    * stream names with backslashes/control characters and then poisons
-    * the next run's accumulate-parse.
-    */
-  private def renderMetrics(counts: Seq[(String, Long)]): String = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    // render from the ordered list (callers sort by key) — .toMap would
-    // discard that order and make the JSON byte-nondeterministic per run
-    JsonMethods.compact(JsonMethods.render(JObject("recordCount" ->
-      JObject(counts.toList.map { case (k, v) => k -> (JLong(v): JValue) }))))
+  /** A `{stream: count}` JSON object → counts; anything else → empty. */
+  private def readCounts(json: JValue): Map[String, Long] = json match {
+    case JObject(fields) =>
+      fields.collect {
+        case (k, JInt(v))  => k -> v.toLong
+        case (k, JLong(v)) => k -> v
+      }.toMap
+    case _ => Map.empty
   }
+
+  /** Counts → `{stream: count}` JSON, keys sorted so the rendered bytes
+    * are deterministic per run. Proper JSON rendering (json4s) —
+    * hand-rolled escaping breaks on stream names with backslashes/control
+    * characters and then poisons the next run's accumulate-parse.
+    */
+  private def countsJson(counts: Map[String, Long]): JObject =
+    JObject(counts.toList.sortBy(_._1).map { case (k, v) => k -> (JLong(v): JValue) })
+
+  private def compactJson(json: JValue): String =
+    JsonMethods.compact(JsonMethods.render(json))
 
   /** Streaming metrics: one idempotent file per micro-batch under
     * `.metrics/`, then totals recomputed from ALL batch files. A replayed
@@ -529,14 +484,11 @@ object SingerPipeline {
     * at-least-once-safe counterpart of [[writeJobMetrics]].
     */
   def writeBatchMetrics(dir: String, batchId: Long, counts: Map[String, Long]): Unit = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
     val mdir = Paths.get(dir, ".metrics")
     Files.createDirectories(mdir)
     Files.writeString(
       mdir.resolve(s"batch-$batchId.json"),
-      JsonMethods.compact(JsonMethods.render(
-        JObject(counts.toList.sortBy(_._1).map { case (k, v) => k -> (JLong(v): JValue) }))))
+      compactJson(countsJson(counts)))
     import scala.jdk.CollectionConverters._
     // close the directory stream (one leaked fd per micro-batch kills a
     // long-running query at ulimit); materialize INSIDE the try
@@ -544,20 +496,12 @@ object SingerPipeline {
     val totals =
       try listing.iterator().asScala
         .filter(_.getFileName.toString.matches("batch-\\d+\\.json"))
-        .flatMap { f =>
-          JsonMethods.parse(Files.readString(f)) match {
-            case JObject(fields) => fields.collect {
-              case (k, JInt(v))  => k -> v.toLong
-              case (k, JLong(v)) => k -> v
-            }
-            case _ => Nil
-          }
-        }
+        .flatMap(f => readCounts(JsonMethods.parse(Files.readString(f))))
         .toList.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).sum }
       finally listing.close()
     Files.writeString(
       Paths.get(dir, "job_metrics.json"),
-      renderMetrics(totals.toSeq.sortBy(_._1)))
+      compactJson(JObject("recordCount" -> countsJson(totals))))
   }
 
   /** Streaming STATE passthrough: one idempotent state file per
@@ -588,6 +532,9 @@ object SingerPipeline {
   private def deleteRecursively(p: java.nio.file.Path): Unit =
     if (Files.exists(p)) {
       import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+      // Files.walk holds a directory fd until closed
+      val walk = Files.walk(p)
+      try walk.iterator().asScala.toSeq.reverse.foreach(Files.delete)
+      finally walk.close()
     }
 }
